@@ -50,7 +50,8 @@ object Bench {
 
   private final case class QStat(name: String, secs: Double, shuffleB: Long,
                                  spillB: Long, peakB: Long, ok: Boolean,
-                                 median: Double = 0.0, jobs: Long = 0L,
+                                 median: Option[Double] = None,
+                                 jobs: Long = 0L,
                                  tasks: Long = 0L)
 
   private def timeSuite(spark: SparkSession, sfDir: String,
@@ -130,12 +131,13 @@ object Bench {
       // median over the successful reps, alongside the min: the min is the
       // steady-state cost (unchanged contract), the median bounds how far
       // box noise pushed the other reps — flat code with a flat median and
-      // a swung min is weather, not a plan change
+      // a swung min is weather, not a plan change. None when every rep
+      // failed: an aborted rep's wall is not a measurement.
       val med = {
         val s = okSecs.sorted
-        if (s.isEmpty) lastSecs
-        else if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+        if (s.isEmpty) None
+        else if (s.size % 2 == 1) Some(s(s.size / 2))
+        else Some((s(s.size / 2 - 1) + s(s.size / 2)) / 2.0)
       }
       QStat(name, if (best == Double.MaxValue) lastSecs else best,
         shuffleB, spillB, meters.peak.get(), okAny, med, jobsN, tasksN)
@@ -291,7 +293,8 @@ object Bench {
     // the full artifact so a judge can separate plan changes from box
     // weather without diffing plan dumps — jobs/tasks are attributed from
     // rep 0 like shuffle/spill (the plan is deterministic).
-    val medians = obj(primary.map(q => q.name -> f"${q.median}%.3f"))
+    val medians =
+      obj(primary.flatMap(q => q.median.map(m => q.name -> f"$m%.3f")))
     val jobsObj = obj(primary.map(q => q.name -> q.jobs.toString))
     val tasksObj = obj(primary.map(q => q.name -> q.tasks.toString))
     // failed queries BY NAME in the full artifact: a failed query still
@@ -322,7 +325,7 @@ object Bench {
       "spill_regressions" -> spillRegs.size.toString,
       // inventory-wide deterministic totals (see the full artifact for
       // the per-query maps): flat code => flat totals, whatever the wall
-      "total_median_sec" -> f"${primary.map(_.median).sum}%.1f",
+      "total_median_sec" -> f"${primary.flatMap(_.median).sum}%.1f",
       "total_jobs" -> primary.map(_.jobs).sum.toString,
       "total_tasks" -> primary.map(_.tasks).sum.toString))
     val budget = 1800 - header.length - 64 // leave room for the tail keys

@@ -694,42 +694,64 @@ object Dedup {
     * [[simhashPairsFromSig]], [[tokenJaccardPairs]], [[embeddingLshPairs]])
     * say "A duplicates B", but keep-one-per-cluster needs the transitive
     * closure (A~B, B~C ⇒ {A,B,C} is ONE cluster with one canonical doc).
-    * Returns (id, component) for every node appearing in an edge, where
-    * component = smallest node id reachable from `id` — deterministic, so
-    * an exact SQL oracle (recursive closure) can verify it.
+    * Returns (id, comp) for every node appearing in an edge, where
+    * comp = smallest node id reachable from `id` — deterministic, so an
+    * exact SQL oracle (recursive closure) can verify it.
     *
-    * Algorithm: distributed min-label propagation with path halving. Each
-    * round does (1) a neighbor-min step — every node adopts the smallest
-    * label among itself and its neighbors (join + map-side-combinable min
-    * aggregation, both keyed by node id) — and (2) a pointer-jump step —
-    * every node re-reads the label of its own label (labels always name
-    * nodes, so this is an equi-self-join on the label frame). Neighbor
-    * steps alone need O(diameter) rounds; the jump step contracts chains
-    * exponentially (the Hash-to-Min shape, Rastogi et al. 2013), so long
-    * dup-chains still converge in O(log diameter). Duplicate clusters are
-    * near-cliques in practice — 2-3 rounds end it.
+    * Two routes, chosen on the MEASURED edge count (the bpeTrainAuto
+    * device) and proven equal row for row by ComponentsSpec. The
+    * projected (src, dst) edges are persisted first, so the size probe
+    * and whichever route follows read the upstream edge pipeline (a
+    * Jaccard or cosine candidate generator) once, at its own
+    * parallelism:
     *
-    * Scale: per-round state is (id, component) = 16 bytes per node; every
-    * step is an equi-join/aggregation on node id (AQE-planned, skew-safe,
-    * spillable). Each round's labels are CHECKPOINTED, not merely
-    * persisted: the jump step self-joins the label frame, so the logical
-    * plan would double every round — 2^rounds plan nodes — and plan
-    * analysis itself OOMs long before any data moves. Checkpointing
-    * truncates both lineage and plan to constant depth. Nothing is
-    * collected to the driver — convergence is detected from the sum of
-    * labels, which strictly decreases until fixpoint; the sum rides the
-    * checkpoint materialization as an observe() metric (r13), so each
-    * round is ONE Spark job, not checkpoint + aggregation.
+    *  - Local (at most [[ccLocalMaxEdges]] edges): one pass fills the
+    *    cache and counts the edges as an observed metric; under the cap
+    *    a second job collects them from the cache, and a union-find on
+    *    the driver closes them over primitive arrays. Ids are sorted
+    *    once, so a node's array index orders like its id; every union
+    *    links the larger root under the smaller, and each root is
+    *    therefore its component's minimum id. The labels come back as a
+    *    one-partition LocalRelation. At the driver scale factors the
+    *    distributed loop spends ~0.1 s per Spark job on a few thousand
+    *    nodes (embedding_cluster_inv at sf0.1: 102 jobs, 5.3 s); this
+    *    route adds two jobs to the edge pipeline's own. Long ids only
+    *    (every edge producer here emits them); other id types, and any
+    *    null endpoint, take the distributed route.
+    *  - Distributed (over the cap): min-label propagation with pointer
+    *    jumping. Each round does (1) a neighbor-min step — every node
+    *    adopts the smallest label among itself and its neighbors (join +
+    *    map-side-combinable min aggregation, both keyed by node id) — and
+    *    (2) a pointer-jump step — every node re-reads the label of its own
+    *    label (labels always name nodes, so this is an equi-self-join on
+    *    the label frame). Neighbor steps alone need O(diameter) rounds;
+    *    the jump step contracts chains exponentially (the Hash-to-Min
+    *    shape, Rastogi et al. 2013), so dup-chains whose ids grow along
+    *    the chain converge in O(log diameter). Chains with shuffled ids
+    *    take far more rounds (a simulation of this round rule needs 62
+    *    for a 256-node path). Nothing but the convergence sum reaches
+    *    the driver.
     *
-    * `checkpointDir`: None (default) uses `localCheckpoint` — blocks live
-    * on executors, right for a single-JVM run, but an executor loss kills
-    * the job since truncated lineage cannot recompute. On a multi-node
-    * run pass a reliable (HDFS/S3) directory: each round's labels are
-    * written there with `.checkpoint()` and survive any executor death —
-    * a 100 TB closure takes long enough that one WILL die. The caller
-    * owns the directory's lifecycle (set
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` or clean it
-    * after the run).
+    * Distributed scale: per-round state is (id, comp) = 16 bytes per
+    * node; every step is an equi-join/aggregation on node id (AQE-planned,
+    * skew-safe, spillable). Each round's labels are CHECKPOINTED, not
+    * merely persisted: the jump step self-joins the label frame, so the
+    * logical plan would double every round — 2^rounds plan nodes — and
+    * plan analysis itself OOMs long before any data moves. Checkpointing
+    * truncates both lineage and plan to constant depth. Convergence is
+    * detected from the sum of labels, which strictly decreases until
+    * fixpoint; the sum rides the checkpoint materialization as an
+    * observe() metric, so each round is ONE Spark job.
+    *
+    * `checkpointDir` (distributed route only): None (default) uses
+    * `localCheckpoint` — blocks live on executors, right for a single-JVM
+    * run, but an executor loss kills the job since truncated lineage
+    * cannot recompute. On a multi-node run pass a reliable (HDFS/S3)
+    * directory: each round's labels are written there with
+    * `.checkpoint()` and survive any executor death — a 100 TB closure
+    * takes long enough that one WILL die. The caller owns the directory's
+    * lifecycle (set `spark.cleaner.referenceTracking.cleanCheckpoints=true`
+    * or clean it after the run).
     *
     * The checkpoint directory is SparkContext-GLOBAL state. To avoid
     * silently redirecting other `.checkpoint()` users in the same
@@ -737,6 +759,96 @@ object Dedup {
     * configured yet; if one already is, it wins and this parameter's
     * value is ignored (reliable checkpointing still happens, into the
     * pre-configured directory). */
+  def connectedComponents(edges: DataFrame, src: String, dst: String,
+                          maxIter: Int = 25,
+                          checkpointDir: Option[String] = None,
+                          prePartitionMinNodes: Long = 1L << 20): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    val pairs = edges.select(col(src).as("u"), col(dst).as("v"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // both routes return checkpointed or driver-built frames, so the
+    // cache is dead once either returns (or throws)
+    try ccLocal(pairs, ccLocalMaxEdges).getOrElse(
+      ccDistributed(pairs, maxIter, checkpointDir, prePartitionMinNodes))
+    finally pairs.unpersist()
+  }
+
+  /** Edge cap at or under which [[connectedComponents]] closes the graph
+    * on the driver: 2^18 edges, so at most 2^19 nodes. The driver's
+    * working set at the cap: the collected rows, ~100 B per boxed Row
+    * ≈ 26 MB; the union-find's primitive arrays, 32 B per edge plus 4 B
+    * per node ≈ 10 MB; the returned LocalRelation, ~48 B per serialized
+    * row ≈ 25 MB held in the plan. The serialized collect result
+    * (~5 MB) is far under the 1 GB `spark.driver.maxResultSize` default,
+    * and the LocalRelation travels inside its one scan task, a fifth of
+    * the 128 MB `spark.rpc.message.maxSize` default that bounds a task.
+    * Two orders of magnitude above the near-dup graphs at the driver
+    * scale factors (≈1.5k edges at sf0.1). Speed does not set the cap:
+    * on one 4-core local[4] JVM, uniform random graphs closed 15-20x
+    * faster on the driver at every size up to 2^20 edges (1.3 s vs 27 s
+    * at 2^18); a multi-node cluster, where the loop scales out, was not
+    * measured. */
+  private[graft] val ccLocalMaxEdges: Long = 1L << 18
+
+  /** The driver route of [[connectedComponents]] over the persisted
+    * (u, v) edge frame: None when it has more than `maxEdges` rows, a
+    * null endpoint or non-Long ids. */
+  private[graft] def ccLocal(pairs: DataFrame,
+                             maxEdges: Long): Option[DataFrame] = {
+    import org.apache.spark.sql.{Observation, Row}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    if (pairs.schema.exists(_.dataType != LongType)) return None
+    val edgeCount = Observation("cc_edges")
+    pairs.observe(edgeCount, count(lit(1)).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    if (edgeCount.get("n").asInstanceOf[Long] > maxEdges) return None
+    val rows = pairs.collect()
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val m = rows.length
+    val ends = new Array[Long](2 * m)
+    var i = 0
+    while (i < m) {
+      ends(2 * i) = rows(i).getLong(0)
+      ends(2 * i + 1) = rows(i).getLong(1)
+      i += 1
+    }
+    // sorted distinct ids: a node's index orders exactly like its id
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    i = 0
+    while (i < ids.length) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = { // path halving
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    i = 0
+    while (i < m) {
+      val ra = find(java.util.Arrays.binarySearch(ids, 0, n, ends(2 * i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, 0, n, ends(2 * i + 1)))
+      // the smaller root wins, so every root is its component's min id
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 1
+    }
+    val out = new java.util.ArrayList[Row](n)
+    i = 0
+    while (i < n) { out.add(Row(ids(i), ids(find(i)))); i += 1 }
+    // the distributed route's nullability: id from the union of both
+    // endpoint columns, comp from a min() aggregate (always nullable)
+    val schema = StructType(Seq(
+      StructField("id", LongType, pairs.schema.exists(_.nullable)),
+      StructField("comp", LongType, nullable = true)))
+    // one partition: at the cap the labels are a small fraction of a
+    // task's size limit (see ccLocalMaxEdges), and a LocalTableScan's
+    // default slicing (one per core) only multiplies the downstream tasks
+    Some(pairs.sparkSession.createDataFrame(out, schema).coalesce(1))
+  }
+
   /** Times the observe-folded convergence statistic fell back to its own
     * aggregation job (diagnostics: a spec pins this at 0 — the fold IS
     * the optimization; the fallback only guards against a Spark release
@@ -744,12 +856,16 @@ object Dedup {
   private[graft] val ccObserveFallbacks =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def connectedComponents(edges: DataFrame, src: String, dst: String,
-                          maxIter: Int = 25,
-                          checkpointDir: Option[String] = None,
-                          prePartitionMinNodes: Long = 1L << 20): DataFrame = {
+  /** The distributed route of [[connectedComponents]] over the (u, v)
+    * edge frame, which the caller persists: the distinct-nodes
+    * materialization and symPlus's first caching below both read it, and
+    * without the cache the upstream edge pipeline would run end to end
+    * twice. */
+  private[graft] def ccDistributed(pairs: DataFrame, maxIter: Int,
+                                   checkpointDir: Option[String],
+                                   prePartitionMinNodes: Long): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val sc = edges.sparkSession.sparkContext
+    val sc = pairs.sparkSession.sparkContext
     // never clobber an application-configured dir (session-global state)
     checkpointDir.foreach(d =>
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d))
@@ -758,13 +874,7 @@ object Dedup {
       else df.localCheckpoint(true)
     // No distinct over the symmetrized edges: min-aggregation is
     // duplicate-insensitive, so deduping would buy nothing but a shuffle.
-    // Persisted BRIEFLY (dropped after round 1): the distinct-nodes
-    // materialization below and symPlus's first caching both consume sym,
-    // and without the cache the upstream edge pipeline (an LSH candidate
-    // generator at scale) would run end to end twice (r12-ADVICE item).
-    val sym = edges.select(col(src).as("u"), col(dst).as("v"))
-      .union(edges.select(col(dst).as("u"), col(src).as("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = pairs.union(pairs.select(col("v").as("u"), col("u").as("v")))
     var labels = materialize(sym.select(col("u").as("id"))
       .distinct()
       .select(col("id"), col("id").as("comp")))
@@ -773,7 +883,7 @@ object Dedup {
     // count(), not isEmpty: the same single action also yields the node
     // count the pre-partitioning route below needs — no extra job.
     val nNodes = labels.count()
-    if (nNodes == 0L) { sym.unpersist(); return labels }
+    if (nNodes == 0L) return labels
     // Edges + one self-loop per node, persisted once (r12 optimization,
     // guide §2.4): the self-loops fold the node's own label into the
     // neighbor-min aggregation, which deletes the old per-round left-join
@@ -802,6 +912,7 @@ object Dedup {
     // so the first round can never be the fixpoint unless a later sum
     // repeats — skipping the initial sum saves one job.
     var prevSum: java.math.BigDecimal = null
+    var fallback = false
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -830,21 +941,28 @@ object Dedup {
       // Spark release ever stopped collecting metrics for checkpoint
       // actions, the explicit aggregation is the fallback (correctness
       // identical, one extra job — a spec pins that it never fires).
+      // The fallback is sticky and restarts the comparison (prevSum
+      // reset): the two statistics need not agree, and comparing an
+      // observed sum with a fallback sum could miss the fixpoint and run
+      // into maxIter.
       val obsDf = jumped.observe("cc_labelsum",
         sum(col("comp").cast("decimal(38,0)")).as("labelsum"))
-      val next = materialize(obsDf)
-      val s = obsDf.queryExecution.observedMetrics.get("cc_labelsum")
-        .map(_.getDecimal(0)).filter(_ != null) match {
-        case Some(d) => d
-        case None => ccObserveFallbacks.incrementAndGet(); labelSum(next)
+      val next = materialize(if (fallback) jumped else obsDf)
+      val observed = if (fallback) None
+        else obsDf.queryExecution.observedMetrics.get("cc_labelsum")
+          .map(_.getDecimal(0)).filter(_ != null)
+      val s = observed.getOrElse {
+        if (!fallback) {
+          ccObserveFallbacks.incrementAndGet()
+          fallback = true
+          prevSum = null
+        }
+        labelSum(next)
       }
       converged = prevSum != null && s.compareTo(prevSum) == 0
       prevSum = s
       labels.unpersist()
       labels = next
-      // symPlus is fully cached once round 1's join consumed it — the
-      // brief sym cache has served both of its readers by then
-      if (iter == 0) sym.unpersist()
       iter += 1
     }
     symPlus.unpersist()

@@ -231,8 +231,10 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(straggle(col("id")).as("s"),
         when(col("id") % 100 === 99, col("id"))
           .otherwise(col("id") + 1).as("d"))
-    def run() = RowCanon.collect(operators.Dedup.connectedComponents(
-      edges, "s", "d", checkpointDir = Some(ckpt)))
+    // the loop itself: connectedComponents closes 5000 edges on the driver
+    def run() = RowCanon.collect(operators.Dedup.ccDistributed(
+      edges.toDF("u", "v"), maxIter = 25, checkpointDir = Some(ckpt),
+      prePartitionMinNodes = 1L << 20))
     val clean = run()
     assert(clean.size == 5001, s"expected 5000 labeled nodes, got ${clean.size - 1}")
     // r13: retry-until-landed (see the executor-loss test) — fixed-delay

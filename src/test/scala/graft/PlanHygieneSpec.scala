@@ -84,10 +84,6 @@ class PlanHygieneSpec extends SparkSpecBase {
       // (tiny) pairs frame so the multiply-referenced invariant branches
       // don't re-run the quadratic pair generation
       "dedup_minhash_inv", "dedup_ngram_inv", "dedup_cluster_inv",
-      // connectedComponents checkpoints labels every round BY DESIGN: the
-      // jump step's self-join would double the plan every round without
-      // the truncation (see Dedup.scala scaladoc)
-      "dedup_cluster",
       // heavyHitters: the Misra-Gries per-partition stream fold IS the
       // operator (typed mapPartitions), and the returned frame is the
       // validated ≤ topN-row driver constant — the vocabulary-scale work

@@ -116,6 +116,14 @@ class ResampleSpec extends SparkSpecBase {
 class ComponentsSpec extends SparkSpecBase {
   import spark.implicits._
 
+  // the distributed loop, called directly: connectedComponents closes
+  // every graph these specs can afford on the driver
+  private def loop(edges: org.apache.spark.sql.DataFrame, maxIter: Int = 25,
+                   checkpointDir: Option[String] = None,
+                   prePartitionMinNodes: Long = 1L << 20) =
+    Dedup.ccDistributed(edges.toDF("u", "v"), maxIter, checkpointDir,
+      prePartitionMinNodes)
+
   test("connectedComponents closes transitive chains to min-id labels") {
     // components: {1,2,3} (chain), {10,11} (pair), {20,21,22,23} (star)
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L),
@@ -133,10 +141,8 @@ class ComponentsSpec extends SparkSpecBase {
     try {
       val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L),
         (20L, 21L), (20L, 22L), (20L, 23L)).toDF("id_a", "id_b")
-      val local = Dedup.connectedComponents(edges, "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
-      val reliable = Dedup.connectedComponents(edges, "id_a", "id_b",
-          checkpointDir = Some(dir.toString))
+      val local = loop(edges).as[(Long, Long)].collect().toMap
+      val reliable = loop(edges, checkpointDir = Some(dir.toString))
         .as[(Long, Long)].collect().toMap
       assert(reliable == local)
       // the rounds actually wrote through the reliable dir
@@ -154,9 +160,11 @@ class ComponentsSpec extends SparkSpecBase {
     // 199); with the jump step it must converge well within 25 rounds
     val edges = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val before = Dedup.ccObserveFallbacks.get()
-    val r = Dedup.connectedComponents(edges, "id_a", "id_b", maxIter = 12)
-      .as[(Long, Long)].collect()
+    val r = loop(edges, maxIter = 12).as[(Long, Long)].collect()
     assert(r.length == 200 && r.forall(_._2 == 0L))
+    assert(Dedup.connectedComponents(edges, "id_a", "id_b")
+      .as[(Long, Long)].collect().sorted.sameElements(r.sorted),
+      "driver route differs from the loop on the chain")
     // the convergence sums must come from the observe() metrics riding
     // the checkpoint action — the fallback aggregation job existing at
     // all would silently undo the one-job-per-round optimization
@@ -167,7 +175,7 @@ class ComponentsSpec extends SparkSpecBase {
   test("maxIter guard throws instead of returning partial labels") {
     val edges = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     intercept[graft.GraftException] {
-      Dedup.connectedComponents(edges, "id_a", "id_b", maxIter = 2)
+      loop(edges, maxIter = 2).collect()
     }
   }
 
@@ -192,10 +200,12 @@ class ComponentsSpec extends SparkSpecBase {
       val byRoot = nodes.groupBy(find).flatMap { case (_, ms) =>
         val m = ms.min; ms.map(_ -> m)
       }
-      val got = Dedup.connectedComponents(
-        edges.toDF("id_a", "id_b"), "id_a", "id_b")
+      val df = edges.toDF("id_a", "id_b")
+      val got = Dedup.connectedComponents(df, "id_a", "id_b")
         .as[(Long, Long)].collect().toMap
       assert(got == byRoot, s"trial $trial (n=$n) mismatch")
+      assert(loop(df).as[(Long, Long)].collect().toMap == byRoot,
+        s"trial $trial (n=$n): the distributed loop mismatches")
     }
   }
 
@@ -269,8 +279,7 @@ class ComponentsSpec extends SparkSpecBase {
       spark.listenerManager.register(capture)
       try {
         shuffleB.set(0)
-        val r = Dedup.connectedComponents(edges, "id_a", "id_b",
-            prePartitionMinNodes = thresh)
+        val r = loop(edges, prePartitionMinNodes = thresh)
           .as[(Long, Long)].collect().toMap
         Thread.sleep(300) // let async listener events drain
         import scala.jdk.CollectionConverters._
@@ -303,8 +312,9 @@ class ComponentsSpec extends SparkSpecBase {
       "scan — the structural assertion is vacuous")
     assert(bytesOn < bytesOff,
       s"route saved no shuffle bytes: on=$bytesOn off=$bytesOff")
-    // receipt for the judge: the first round's executed plan, both routes
-    val dir = new java.io.File("plans/r13"); dir.mkdirs()
+    // receipt: the first round's executed plan, both routes (under
+    // target/, so a test run never rewrites a tracked file)
+    val dir = new java.io.File("target/receipts"); dir.mkdirs()
     java.nio.file.Files.write(
       new java.io.File(dir, "cc_prepartition_route.txt").toPath,
       (s"# shuffle bytes, ${onRounds.size}+ rounds, broadcast+AQE off\n" +
@@ -319,9 +329,76 @@ class ComponentsSpec extends SparkSpecBase {
   test("empty edge set returns an empty frame, not a convergence error") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.connectedComponents(empty, "id_a", "id_b").isEmpty)
+    assert(loop(empty).isEmpty)
     val r = Dedup.duplicateClusters(empty)
     assert(r.isEmpty &&
       r.columns.toSeq == Seq("doc_id", "component", "cluster_size"))
+  }
+
+  test("driver route ≡ loop on duplicate, reversed and negative ids") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val edges = Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (5L, 4L),
+      (4L, 5L), (9L, 7L), (7L, -4L), (-4L, 5L)).toDF("id_a", "id_b")
+    val local = Dedup.connectedComponents(edges, "id_a", "id_b")
+    val dist = loop(edges)
+    assert(local.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation]), "not the driver route")
+    assert(local.schema == dist.schema)
+    val rows = local.as[(Long, Long)].collect().sorted
+    assert(rows.sameElements(dist.as[(Long, Long)].collect().sorted))
+    assert(rows.toSeq == Seq((-4L, -4L), (1L, 1L), (2L, 1L), (3L, 3L),
+      (4L, -4L), (5L, -4L), (7L, -4L), (9L, -4L)))
+  }
+
+  test("the driver route declines an edge list over its cap") {
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (4L, 3L), (11L, 12L))
+      .toDF("u", "v")
+    assert(Dedup.ccLocal(edges, 4).isEmpty)
+    assert(Dedup.ccLocal(edges, 5).get.as[(Long, Long)].collect().toMap ==
+      loop(edges).as[(Long, Long)].collect().toMap)
+  }
+
+  test("the driver route reads the edge pipeline once, in parallel") {
+    import org.apache.spark.TaskContext
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // 8 partitions, 200 stars of 10 nodes; every evaluation of the edge
+    // pipeline records the task it ran in
+    val evals = spark.sparkContext.collectionAccumulator[Long]("cc-evals")
+    val tag = udf { (id: Long) =>
+      evals.add(TaskContext.get().taskAttemptId()); id
+    }.asNondeterministic()
+    val pipeline = spark.range(0, 2000, 1, 8)
+      .select(tag(col("id")).as("id_a"),
+        (col("id") - col("id") % 10).as("id_b"))
+    val expected = (0L until 2000L).map(i => i -> (i - i % 10)).toMap
+    // as built (the dedup_cluster / embedding_cluster shape) and
+    // checkpointed (the *_inv queries' shape)
+    for ((name, edges) <- Seq("uncheckpointed" -> pipeline,
+        "checkpointed" -> pipeline.localCheckpoint())) {
+      evals.reset()
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new SparkListener {
+        override def onJobStart(s: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+      }
+      spark.sparkContext.addSparkListener(l)
+      val cc = try {
+        val r = Dedup.connectedComponents(edges, "id_a", "id_b")
+        Thread.sleep(500) // the listener bus is async; let JobStarts land
+        r
+      } finally spark.sparkContext.removeSparkListener(l)
+      assert(jobs.get() <= 2, s"$name: driver route ran ${jobs.get()} jobs")
+      import scala.jdk.CollectionConverters._
+      val ran = evals.value.asScala.toSeq
+      if (name == "checkpointed") assert(ran.isEmpty, name)
+      else {
+        assert(ran.size == 2000,
+          s"$name: the edge pipeline ran ${ran.size} rows, not 2000")
+        assert(ran.distinct.size == 8,
+          s"$name: the edge pipeline ran in ${ran.distinct.size} tasks, not 8")
+      }
+      assert(cc.as[(Long, Long)].collect().toMap == expected, name)
+    }
   }
 
   test("duplicateClusters reports every member with canonical + size") {
